@@ -1,11 +1,14 @@
 """Cloud object-store (S3A) session configuration.
 
-The engine's paths all flow through Spark's Hadoop FileSystem layer, so
-pointing sources/sinks at ``s3a://bucket/prefix`` needs no code changes
-— only configuration. This module is the executable form of the README
-"Cloud object stores" section: a pure config builder (unit-testable
-without any cloud) plus a session constructor that layers it onto
-:func:`session.get_spark`.
+The lake, the tables and the ``watch`` stream's arrival discovery flow
+through Spark's Hadoop FileSystem layer, so pointing them at
+``s3a://bucket/prefix`` needs no code changes — only configuration.
+Ingest's per-object reads are the exception: workers open objects with
+``ingest.extract.open_object`` (pyarrow's S3 client, AWS default
+credential chain), which none of the settings here affect. This module
+is the executable form of the README "Cloud object stores" section: a
+pure config builder (unit-testable without any cloud) plus a session
+constructor that layers it onto :func:`session.get_spark`.
 
 The reference reads/writes S3 via boto3 (``src/s3wrapper.py:53-66``,
 ``src/app.py:44-59``); the engine-side mapping:
@@ -15,9 +18,9 @@ The reference reads/writes S3 via boto3 (``src/s3wrapper.py:53-66``,
   staging) commit via multipart-upload completion — O(1) and atomic per
   file. ``commitProtocolClass``/``BindingParquetOutputCommitter`` route
   Spark's parquet writes through them.
-- **fadvise=random**: the reference's 10 MB-capped ranged .dcm reads
-  (``src/s3wrapper.py:53``) must issue ranged GETs; the default
-  sequential policy drains the whole object on first seek.
+- **fadvise=random**: seek-heavy S3A reads (Parquet footers and column
+  chunks of the lake) must issue ranged GETs; the default sequential
+  policy drains the whole object on first seek.
 - **Upload buffering to disk** keeps executor memory bounded while
   multipart parts assemble (heap buffering OOMs wide ingest tasks).
 - **Connection pool ≥ task threads**: every concurrent parquet footer /
@@ -50,8 +53,8 @@ def cloud_conf(
 
     ``committer``: ``magic`` (in-bucket, needs no shared staging FS) or
     ``directory``/``partitioned`` (staging on a cluster-local FS —
-    pass ``staging_tmp``). ``fadvise``: ``random`` for the ranged-read
-    ingest shape, ``sequential`` for full-file scan-heavy jobs.
+    pass ``staging_tmp``). ``fadvise``: ``random`` for seek-heavy Parquet
+    reads, ``sequential`` for full-file scan-heavy jobs.
     ``warehouse``: ``s3a://`` URI for ``spark.sql.warehouse.dir`` so
     catalog DDL (sources/catalog.py) lands tables in the bucket.
 

@@ -3,6 +3,8 @@ mapInPandas extraction UDF).
 
 Mirrors the reference's dispatch surface:
 - ignore-list extensions .json/.txt/.csv (src/s3wrapper.py:7)
+- bare objects are read only up to the 10 MB ranged-GET cap; archives are
+  read whole, since members can sit anywhere (src/s3wrapper.py:53-63)
 - empty or over-long extensions default to .dcm (src/s3wrapper.py:76-84)
 - zip members enumerated, directories and DICOMDIR skipped, DICM magic
   required (src/utils/utils.py:6-28)
@@ -27,6 +29,8 @@ ZIP_EXTS = {".zip"}
 TAR_EXTS = {".tar", ".gz", ".tgz", ".bz2", ".xz"}
 DEFAULT_EXT = ".dcm"
 MAX_EXT_LEN = 5  # longer "extensions" are treated as no extension -> .dcm
+# reference caps .dcm GETs at bytes=0-10000000 (src/s3wrapper.py:55-59)
+DCM_RANGED_READ_BYTES = 10_000_001
 
 
 def eval_ext(key: str) -> str:

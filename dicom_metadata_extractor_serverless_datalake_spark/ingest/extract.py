@@ -1,13 +1,19 @@
 """Binary object -> canonical metadata rows (the reference's central
 transform, src/dicomwrapper.py:36-64, re-expressed as a pure function so
-the same code runs in unit tests and inside the Spark mapInPandas UDF).
+the same code runs in unit tests and inside every Spark ingest mode).
+
+``read_extract`` is the one worker-side read: batch ingest, ``watch``
+and ``format("dicom")`` all hand it object paths, and it routes, reads
+(with the ranged cap) and extracts each object where it sits, from the
+local file system or from S3 (``open_object``).
 """
 
 from __future__ import annotations
 
 import datetime
-from collections.abc import Iterator
-from urllib.parse import urlparse
+import functools
+import re
+from collections.abc import Iterable, Iterator
 
 from ..dicom import codec, vr
 from ..schema import CANONICAL_KEYWORDS, DICOM_METADATA_SCHEMA, INGEST_SCHEMA, to_camel_case
@@ -102,12 +108,70 @@ def _error_row(lineage: dict[str, str | None], err: Exception, stage: str) -> di
     return row
 
 
+# scheme and netloc only: a key may hold any character, '#' and '?'
+# included, so nothing after the netloc is a fragment or a query
+_URI = re.compile(r"([A-Za-z][A-Za-z0-9+.-]*):(?://([^/]*))?(.*)", re.S)
+
+
+def _split_uri(path: str) -> tuple[str, str, str]:
+    """URI or bare path -> (scheme, netloc, path); '' where absent."""
+    m = _URI.fullmatch(path)
+    if m is None:
+        return "", "", path
+    return m.group(1).lower(), m.group(2) or "", m.group(3)
+
+
 def split_path(path: str) -> tuple[str | None, str | None, str]:
     """file:/ or s3:/ URI -> (bucket, region, key)."""
-    parsed = urlparse(path)
-    if parsed.scheme in ("s3", "s3a", "s3n"):
-        return parsed.netloc, None, parsed.path.lstrip("/")
-    return None, None, parsed.path or path
+    scheme, netloc, rest = _split_uri(path)
+    if scheme in ("s3", "s3a", "s3n"):
+        return netloc, None, rest.lstrip("/")
+    return None, None, rest or path
+
+
+def local_path(path: str) -> str:
+    """file: URI or bare path -> the local file-system path."""
+    scheme, _netloc, rest = _split_uri(path)
+    if scheme in ("", "file"):
+        return rest or path
+    raise ValueError(
+        f"listing scheme {scheme!r} needs an object-store lister (a boto3 "
+        "paginator for s3://), which this package lacks"
+    )
+
+
+_S3_SCHEMES = ("s3", "s3a", "s3n")
+
+
+def check_readable(path: str) -> None:
+    """Raise ValueError unless :func:`open_object` can open objects under
+    ``path``: local paths, file: URIs and s3/s3a/s3n URIs."""
+    scheme = _split_uri(path)[0]
+    if scheme not in ("", "file", *_S3_SCHEMES):
+        raise ValueError(
+            f"cannot read {scheme!r} objects: ingest opens local paths and "
+            "s3/s3a/s3n URIs only"
+        )
+
+
+@functools.lru_cache(maxsize=None)
+def _s3_filesystem(bucket: str):
+    # one client per bucket and worker process; pyarrow resolves the
+    # bucket's region and takes credentials and AWS_ENDPOINT_URL from the
+    # AWS default chain (the Hadoop fs.s3a.* keys do not apply here)
+    from pyarrow import fs
+
+    return fs.FileSystem.from_uri(f"s3://{bucket}")[0]
+
+
+def open_object(path: str):
+    """Object path -> a readable binary file object. ``read(n)`` on an
+    S3 object issues a ranged GET for the first n bytes."""
+    check_readable(path)
+    scheme, netloc, rest = _split_uri(path)
+    if scheme in _S3_SCHEMES:
+        return _s3_filesystem(netloc).open_input_file(f"{netloc}/{rest.lstrip('/')}")
+    return open(rest or path, "rb")
 
 
 def extract_records(path: str, content: bytes) -> Iterator[dict]:
@@ -136,3 +200,19 @@ def extract_records(path: str, content: bytes) -> Iterator[dict]:
             yield flatten(elements, lineage)
         except Exception as err:
             yield _error_row(lineage, err, stage="dicom_parse")
+
+
+def read_extract(paths: Iterable[str]) -> Iterator[dict]:
+    """Object paths -> canonical row dicts, reading each object where it
+    sits: extension route -> skip ignored -> ranged cap for non-archives
+    -> read -> :func:`extract_records` (src/app.py:97-189 per object)."""
+    from .archives import DCM_RANGED_READ_BYTES, IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
+
+    for path in paths:
+        ext = eval_ext(path)
+        if ext in IGNORED_EXTS:
+            continue
+        cap = None if ext in ZIP_EXTS | TAR_EXTS else DCM_RANGED_READ_BYTES
+        with open_object(path) as fh:
+            content = fh.read(cap)
+        yield from extract_records(path, content)

@@ -1,4 +1,4 @@
-"""Spark ingest job: binary source -> mapInPandas extraction ->
+"""Spark ingest job: object paths -> mapInPandas read + extraction ->
 partitioned Parquet lake + quarantine sink.
 
 This is the reference's whole serverless pipeline (S3 event -> Lambda ->
@@ -6,10 +6,16 @@ pydicom -> awswrangler Parquet, SURVEY §3.1) as one declarative Spark
 job. The Lambda/Batch 500 MB size router (src/app.py:118-184) dissolves:
 task scheduling handles all object sizes.
 
+Every ingest mode runs the same two steps: ``extract_from_listing``
+turns a frame of object paths into metadata rows (batch ingest lists
+with ``sources.binary.list_binary_objects``; ``watch`` feeds each
+micro-batch's new paths) and ``write_extracted`` splits them into the
+lake and the quarantine.
+
 Scale notes (100 TB target):
-- one input file = one task by default via binaryFile; for millions of
-  small objects, ``sources.binary.read_binary`` can pack many objects
-  per partition (listing-based reader) to amortize task overhead.
+- the driver only lists paths; workers open the objects themselves
+  (``ingest.extract.read_extract``, with the 10 MB ranged .dcm cap), so
+  only the small metadata rows cross a process boundary.
 - extraction is an Arrow-batched mapInPandas (not per-row Python UDF).
 - the lake is Hive-partitioned on study_date so Catalyst prunes
   partitions on the query side; writes repartition by the partition
@@ -27,85 +33,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import DICOM_METADATA_SCHEMA, INGEST_SCHEMA, PARTITION_COL
-from .extract import extract_records
+from .extract import read_extract
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _read_extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [f.name for f in INGEST_SCHEMA.fields]
     for pdf in batches:
-        rows: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            rows.extend(extract_records(path, bytes(content)))
+        rows = list(read_extract(pdf["path"]))
         if rows:
             yield pd.DataFrame(rows, columns=cols)
 
 
-def extract_df(binary_df: DataFrame) -> DataFrame:
-    """(path, content) binary DataFrame -> canonical metadata rows with an
-    ``error`` channel column. Use when the bytes are already in the plan
-    (e.g. the binaryFile streaming source)."""
-    return binary_df.select("path", "content").mapInPandas(
-        _extract_batches, schema=INGEST_SCHEMA
-    )
+def extract_from_listing(listing: DataFrame) -> DataFrame:
+    """Frame with a ``path`` column -> canonical metadata rows with an
+    ``error`` channel, reading AND extracting in one Python pass.
+
+    Bytes are opened and parsed in the same worker and only the (small)
+    metadata rows cross back. Per-object I/O (and the 10 MB ranged .dcm
+    cap) lives worker-side, exactly where it belongs on a real cluster
+    doing ranged object-store GETs."""
+    return listing.select("path").mapInPandas(_read_extract_batches, schema=INGEST_SCHEMA)
 
 
-def extract_from_listing(listing: DataFrame, ranged_cap: int | None = None) -> DataFrame:
-    """(path, size) listing -> canonical metadata rows, reading AND
-    extracting in one Python pass.
-
-    This is the batch-ingest hot path: with a separate read stage the
-    raw bytes make two Arrow round-trips (Python read -> JVM -> Python
-    extract); fused, bytes are opened and parsed in the same worker and
-    only the (small) metadata rows cross back. Per-object I/O (and the
-    10 MB ranged .dcm cap) lives worker-side, exactly where it belongs
-    on a real cluster doing ranged object-store GETs."""
-    from ..sources.binary import DCM_RANGED_READ_BYTES
-    from .archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
-
-    cap = ranged_cap if ranged_cap is not None else DCM_RANGED_READ_BYTES
-    cols = [f.name for f in INGEST_SCHEMA.fields]
-
-    def _read_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for path in pdf["path"]:
-                ext = eval_ext(path)
-                if ext in IGNORED_EXTS:
-                    continue
-                this_cap = None if ext in ZIP_EXTS | TAR_EXTS else cap
-                with open(path, "rb") as fh:
-                    content = fh.read(this_cap) if this_cap else fh.read()
-                rows.extend(extract_records(path, content))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return listing.mapInPandas(_read_extract, schema=INGEST_SCHEMA)
-
-
-def ingest_batch(
-    spark: SparkSession,
-    input_path: str,
-    lake_path: str,
-    quarantine_path: str | None = None,
-    use_binary_file_source: bool = False,
+def write_extracted(
+    extracted: DataFrame, lake_path: str, quarantine_path: str | None = None
 ) -> tuple[int, int]:
-    """Batch-ingest every binary object under input_path.
-
-    Returns (lake_rows, quarantined_rows). Equivalent of replaying all S3
-    ObjectCreated events (deploy/serverless.yml:195-200) through the
-    reference pipeline in one job.
-
-    The default source is the listing-based ranged reader
-    (sources.binary.read_binary): it honors the reference's 10 MB ranged
-    .dcm read, sees zero-byte objects (binaryFile drops them, losing the
-    DLQ contract for empty DICOMDIR), and packs many small objects per
-    task. Set ``use_binary_file_source`` for Spark's built-in source."""
-    if use_binary_file_source:
-        extracted = extract_df(spark.read.format("binaryFile").load(input_path))
-    else:
-        from ..sources.binary import list_binary_objects
-
-        extracted = extract_from_listing(list_binary_objects(spark, input_path))
+    """Append good rows to the lake and error rows to the quarantine;
+    returns (lake_rows, quarantined_rows). The one sink of every ingest
+    mode."""
+    if "://" not in lake_path or lake_path.startswith("file:"):
+        # a batch with no good rows writes nothing; a missing local lake
+        # dir would fail even a schema-pinned read, so materialize it
+        os.makedirs(lake_path.removeprefix("file:"), exist_ok=True)
     extracted.persist()
     try:
         good = extracted.filter(F.col("error").isNull()).drop("error", "error_log")
@@ -133,6 +92,24 @@ def ingest_batch(
     return n_good, n_bad
 
 
+def ingest_batch(
+    spark: SparkSession,
+    input_path: str,
+    lake_path: str,
+    quarantine_path: str | None = None,
+) -> tuple[int, int]:
+    """Batch-ingest every binary object under input_path.
+
+    Returns (lake_rows, quarantined_rows). Equivalent of replaying all S3
+    ObjectCreated events (deploy/serverless.yml:195-200) through the
+    reference pipeline in one job. The listing sees zero-byte objects
+    (binaryFile drops them, losing the DLQ contract for empty DICOMDIR)."""
+    from ..sources.binary import list_binary_objects
+
+    extracted = extract_from_listing(list_binary_objects(spark, input_path))
+    return write_extracted(extracted, lake_path, quarantine_path)
+
+
 def run_ingest(
     spark: SparkSession,
     input_path: str,
@@ -157,10 +134,6 @@ def run_ingest(
     # explicit schema: an all-quarantined ingest leaves the lake empty,
     # which would otherwise fail schema inference; it also pins column
     # types independent of what any one partition happens to contain
-    if "://" not in lake_path or lake_path.startswith("file:"):
-        # an all-quarantined first ingest never wrote the lake; a missing
-        # local dir fails even a schema-pinned read, so materialize it
-        os.makedirs(lake_path.removeprefix("file:"), exist_ok=True)
     df = spark.read.schema(DICOM_METADATA_SCHEMA).parquet(lake_path)
     if table:
         df.createOrReplaceTempView(table)

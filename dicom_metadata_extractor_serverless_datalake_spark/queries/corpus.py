@@ -54,96 +54,67 @@ from . import selection  # noqa: F401,E402
 # than the rewrite round; the guard then requires it in the front
 # window. Remove entries once a CORRECTNESS artifact >= the rewrite
 # round shows them green (they rejoin the plain staleness rotation).
-_REWRITTEN = {
-    # round-11 rewrites outside CORRECTNESS_r11's sample window:
-    # codegen gram enumeration (shingle_tokens/_minhash_band_pairs
-    # family), Arrow map passes (q53/q57/q145/q150/q265), hash-keyed
-    # spread + derived head model (q225), posexplode spans (q263),
-    # Mann-Kendall grid (q283), fold rewrites (q125/q128)
-    "q52_minhash_lsh": 12,
-    "q53_simhash": 11,
-    "q57_language_id": 11,
-    "q77_dedup_clusters": 11,
-    "q125_collocation_lift": 11,
-    "q128_containment_join": 11,
-    "q145_intradoc_repetition": 11,
-    "q150_gopher_rules": 11,
-    "q220_minhash_calibration": 11,
-    "q225_ppl_buckets": 11,
-    "q228_ngram_novelty": 11,
-    "q240_blocking_recall": 11,
-    "q242_blocking_recall_sampled": 11,
-    "q243_neardup_star": 11,
-    "q244_incremental_neardup": 11,
-    "q251_lsh_s_curve": 11,
-    "q253_lsh_s_curve_sampled": 11,
-    "q187_winnowing": 12,
-    "q263_substring_dedup": 11,
-    "q265_rake_keywords": 11,
-    "q283_mann_kendall": 11,
+_REWRITTEN: dict[str, int] = {
+    # empty: CORRECTNESS_r12 re-verified every r11/r12 rewrite
 }
 
 _PRIORITY = [
-    # (b) rewritten since last driver-green — the r11/r12 optimization
-    # tranche (21 queries; every one oracle-green in the builder's
-    # full-registry sweeps, never driver-sampled post-rewrite)
-    "q52_minhash_lsh",
-    "q53_simhash",
-    "q187_winnowing",
-    "q57_language_id",
-    "q77_dedup_clusters",
-    "q125_collocation_lift",
-    "q128_containment_join",
-    "q145_intradoc_repetition",
-    "q150_gopher_rules",
-    "q220_minhash_calibration",
-    "q225_ppl_buckets",
-    "q228_ngram_novelty",
-    "q240_blocking_recall",
-    "q242_blocking_recall_sampled",
-    "q243_neardup_star",
-    "q244_incremental_neardup",
-    "q251_lsh_s_curve",
-    "q253_lsh_s_curve_sampled",
-    "q263_substring_dedup",
-    "q265_rake_keywords",
-    "q283_mann_kendall",
-    # (c) stalest greens: 29 of the round-6-vintage band (the four
-    # rewritten r6 queries above already lead the window; the 16
-    # remaining r6 rows tie across the boundary, which the guard
-    # allows — bands share rounds)
-    "q01_pricing_summary",
-    "q193_hellinger_drift",
-    "q194_dup_span_coverage",
-    "q195_winnow_match",
-    "q196_cusum_changepoint",
-    "q197_theil_sen",
-    "q198_anova_f",
-    "q199_ks_test",
-    "q200_stream_cusum",
-    "q201_bigram_lm_score",
-    "q202_sequence_packing",
-    "q203_dsir_importance",
-    "q204_temperature_mix",
-    "q205_token_budget_curriculum",
-    "q206_mann_whitney",
-    "q207_markov_transitions",
-    "q208_touch_attribution",
-    "q209_kaplan_meier",
-    "q210_gini_concentration",
-    "q211_stream_attribution",
-    "q212_holt_trend",
-    "q213_dow_seasonality",
-    "q214_k_anonymity",
-    "q215_l_diversity",
-    "q216_matryoshka_audit",
-    "q217_brier_decomposition",
-    "q218_cumulative_gains",
-    "q219_conformal_coverage",
-    "q221_t_closeness",
-    # ^ exactly 50 = the driver window (21 rewritten-pending + 29
-    # stalest). The r7-r11 windows hold fresher driver rows and rotate
-    # behind; everything unlisted follows in registration order via
+    # (c) stalest greens: all 17 round-6 greens, then
+    "q236_source_modularity",
+    "q230_stream_completeness",
+    "q231_stream_ab_monitor",
+    "q241_stream_burstiness",
+    "q222_sequence_completeness",
+    "q235_assortativity",
+    "q238_time_to_convert",
+    "q239_burstiness",
+    "q237_adjusted_rand",
+    "q226_welch_ttest",
+    "q227_kendall_tau",
+    "q232_lang_kappa",
+    "q233_wilson_ci",
+    "q234_jackknife_se",
+    "q223_hard_negatives",
+    "q224_quality_classifier",
+    "q229_length_buckets",
+    # round-7 greens: 33 of the 43 in registration order (the other 10
+    # tie across the boundary, which the guard allows)
+    "q02_filter_project",
+    "q03_join_broadcast_agg",
+    "q04_star_join",
+    "q05_left_join",
+    "q06_right_join",
+    "q07_full_outer_join",
+    "q08_semi_join",
+    "q09_anti_join",
+    "q10_cross_join",
+    "q11_range_join",
+    "q12_agg_stats",
+    "q14_approx_count_distinct",
+    "q69_approx_percentile",
+    "q45_json",
+    "q49_distinct_math",
+    "q50_dedup_exact",
+    "q51_jaccard_pairs",
+    "q54_cosine_topk",
+    "q55_ann_lsh",
+    "q68_neardup_pipeline",
+    "q60_embedding_neardup",
+    "q56_text_stats",
+    "q58_fingerprint",
+    "q59_token_count",
+    "q70_levenshtein_pairs",
+    "q248_cluster_balanced_sample",
+    "q61_image_features",
+    "q62_frame_sample",
+    "q63_modality_rollup",
+    "q65_grouped_map_pandas",
+    "q66_grouped_agg_pandas",
+    "q71_train_split",
+    "q72_stratified_sample",
+    # ^ exactly 50 = the driver window (no rewrite pending; 17 round-6
+    # greens + 33 round-7 greens). Fresher rounds rotate behind;
+    # everything unlisted follows in registration order via
     # _apply_priority.
 ]
 

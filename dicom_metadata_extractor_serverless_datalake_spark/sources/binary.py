@@ -1,4 +1,4 @@
-"""Listing-based binary source with ranged reads.
+"""Object listing and partition planning for every ingest mode.
 
 Why not just ``spark.read.format("binaryFile")``:
 1. it silently skips zero-byte objects, but the reference's contract
@@ -8,26 +8,28 @@ Why not just ``spark.read.format("binaryFile")``:
    .dcm objects — metadata precedes pixel data (src/s3wrapper.py:53-63,
    rationale src/app.py:117);
 3. at 100 TB / millions of small objects, one-file-per-task is task-
-   scheduling death; here the listing is repartitioned and each task
-   reads a *pack* of objects, so task count is governed by
-   ``target_partition_bytes`` not object count.
+   scheduling death; here each task owns a *pack* of objects, so task
+   count is governed by bytes, not object count.
 
-The driver only lists (path, size) — bytes are read executor-side inside
-the extraction stage, so the scan parallelizes and the ranged cap is
-applied before any bytes cross a process boundary.
+The driver only lists (path, size, mtime); bytes are read worker-side
+by ``ingest.extract.read_extract``, so the scan parallelizes and the
+ranged cap is applied before any bytes cross a process boundary.
 """
 
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# reference caps .dcm GETs at bytes=0-10000000 (src/s3wrapper.py:55-59)
-DCM_RANGED_READ_BYTES = 10_000_001
+# the ranged-read cap is importable from the listing module as before
+from ..ingest.archives import DCM_RANGED_READ_BYTES  # noqa: F401
+from ..ingest.extract import local_path
+
+# input bytes one task should own
+TARGET_PARTITION_BYTES = 128 << 20
 
 LISTING_SCHEMA = T.StructType(
     [
@@ -37,83 +39,49 @@ LISTING_SCHEMA = T.StructType(
 )
 
 
-def _local_path(input_path: str) -> str:
-    parsed = urlparse(input_path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path or input_path
-    raise ValueError(
-        f"listing scheme {parsed.scheme!r} needs an object-store lister "
-        "(boto3 paginator for s3://) — not available in this environment"
-    )
+def list_objects(root: str) -> list[tuple[str, int, int]]:
+    """(path, size, mtime_ns) of every object under ``root`` (a file,
+    or a directory walked recursively), zero-byte objects included."""
+    root = local_path(root)
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return [(root, st.st_size, st.st_mtime_ns)]
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs.sort()
+        for name in sorted(files):
+            full = os.path.join(dirpath, name)
+            st = os.stat(full)
+            out.append((full, st.st_size, st.st_mtime_ns))
+    return out
 
 
-def list_binary_objects(
-    spark: SparkSession,
-    input_path: str,
-    recursive: bool = True,
-    target_partition_bytes: int = 128 << 20,
-    min_partitions: int | None = None,
-) -> DataFrame:
+def pack(entries: list[tuple[str, int]]) -> list[list[str]]:
+    """Next-fit over the path-sorted listing: (path, size) entries ->
+    packs of paths, each at most TARGET_PARTITION_BYTES unless it holds
+    a single larger object, and any two neighbours together over it.
+    One pass, so planning stays linear at millions of objects, and a
+    directory's objects stay together."""
+    packs: list[list[str]] = []
+    filled = 0
+    for path, size in entries:
+        if not packs or filled + size > TARGET_PARTITION_BYTES:
+            packs.append([])
+            filled = 0
+        packs[-1].append(path)
+        filled += size
+    return packs
+
+
+def list_binary_objects(spark: SparkSession, input_path: str) -> DataFrame:
     """List objects under ``input_path`` into a (path, size) DataFrame,
-    partitioned so each task owns ~target_partition_bytes of input.
+    partitioned so each task owns ~TARGET_PARTITION_BYTES of input.
 
     Includes zero-byte objects (unlike the binaryFile source)."""
-    root = _local_path(input_path)
-    entries: list[tuple[str, int]] = []
-    if os.path.isfile(root):
-        entries.append((root, os.path.getsize(root)))
-    else:
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                full = os.path.join(dirpath, name)
-                entries.append((full, os.path.getsize(full)))
-            if not recursive:
-                break
+    entries = [(path, size) for path, size, _mtime in list_objects(input_path)]
     total = sum(s for _, s in entries)
     default_par = spark.sparkContext.defaultParallelism
-    n_parts = max(
-        min_partitions or 1,
-        min(len(entries), max(default_par, int(total / max(target_partition_bytes, 1)))),
-    ) or 1
+    n_parts = max(1, min(len(entries), max(default_par, total // TARGET_PARTITION_BYTES)))
     df = spark.createDataFrame(entries, LISTING_SCHEMA)
     # spread by hash of path so adjacent large files don't co-locate
     return df.repartition(n_parts, F.col("path"))
-
-
-def read_binary(
-    spark: SparkSession,
-    input_path: str,
-    ranged_cap: int | None = DCM_RANGED_READ_BYTES,
-    **listing_kwargs,
-) -> DataFrame:
-    """(path, content) DataFrame over every object under input_path.
-
-    ``ranged_cap`` bounds the bytes read for *non-archive* objects (the
-    .dcm ranged-GET analogue); archives are always read fully since
-    members can sit anywhere in the file."""
-    from ..ingest.archives import IGNORED_EXTS, TAR_EXTS, ZIP_EXTS, eval_ext
-
-    listing = list_binary_objects(spark, input_path, **listing_kwargs)
-
-    def _read(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            paths, blobs = [], []
-            for path in pdf["path"]:
-                ext = eval_ext(path)
-                if ext in IGNORED_EXTS:
-                    continue
-                cap = None if ext in ZIP_EXTS | TAR_EXTS else ranged_cap
-                with open(path, "rb") as fh:
-                    blobs.append(fh.read(cap) if cap else fh.read())
-                paths.append(path)
-            yield pd.DataFrame({"path": paths, "content": blobs})
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return listing.mapInPandas(_read, schema=schema)

@@ -1,25 +1,27 @@
 """Streaming ingest: the S3 ObjectCreated -> Lambda event pattern
 (deploy/serverless.yml:195-200) as a Structured Streaming file source.
 
-Every new object under the input path becomes a micro-batch row;
-``foreachBatch`` reuses the exact batch extraction (ingest/extract.py)
-and splits lake vs quarantine — so batch and streaming ingest share one
-code path, and a catch-up run is just ``Trigger.AvailableNow``.
-
-At-least-once S3 events (the reference punts redelivery to Lambda
-retries + DLQ) become idempotent here via dropDuplicates on the lineage
-key before the sink.
+The file source only discovers new objects (through Hadoop's FileSystem,
+so ``s3a://`` prefixes need the hadoop-aws jars): the stream is projected
+to ``path`` before the sink, so Spark never reads an object's bytes (and
+never hits binaryFile's max-length limit); workers open each object
+themselves (``ingest.extract.open_object``: local files, or S3 through
+pyarrow). Each micro-batch of paths
+goes through the batch ingest's own read + extraction and sink
+(``ingest.pipeline``), so the 10 MB ranged cap holds and the stream
+writes the same lake rows as ``ingest_batch``; a catch-up run is just
+``Trigger.AvailableNow``. The checkpointed source delivers each path
+once per query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingest.pipeline import extract_df
-from ..schema import PARTITION_COL
+from ..ingest.extract import check_readable
+from ..ingest.pipeline import extract_from_listing, write_extracted
 
 # The binaryFile source's fixed schema — streaming file sources require an
 # explicit schema (no inference on a stream), so we declare it.
@@ -32,6 +34,8 @@ BINARY_FILE_SCHEMA = T.StructType(
     ]
 )
 
+MAX_FILES_PER_TRIGGER = 1000
+
 
 def start_ingest_stream(
     spark: SparkSession,
@@ -40,39 +44,27 @@ def start_ingest_stream(
     quarantine_path: str | None = None,
     checkpoint_path: str | None = None,
     available_now: bool = True,
-    max_files_per_trigger: int = 1000,
 ) -> StreamingQuery:
     """Start (and return) the streaming ingest query.
 
     ``available_now=True`` processes the backlog then stops — the
     catch-up / replay mode; False runs continuously per micro-batch."""
-    reader = (
+    # fail on the driver, not in every task, for a store workers cannot read
+    check_readable(input_path)
+    # project here, on the stream: inside foreachBatch the batch arrives
+    # with ``content`` already read and a select cannot prune it
+    paths = (
         spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .load(input_path)
+        .select("path")
     )
 
     def sink(batch_df, batch_id: int) -> None:
-        extracted = extract_df(batch_df).dropDuplicates(
-            ["source_s3_key", "source_s3_archive_path"]
-        )
-        extracted.persist()
-        try:
-            good = extracted.filter(F.col("error").isNull()).drop("error", "error_log")
-            bad = extracted.filter(F.col("error").isNotNull())
-            (
-                good.repartition(PARTITION_COL)
-                .write.mode("append")
-                .partitionBy(PARTITION_COL)
-                .parquet(lake_path)
-            )
-            if quarantine_path is not None and bad.limit(1).count() > 0:
-                bad.write.mode("append").parquet(quarantine_path)
-        finally:
-            extracted.unpersist()
+        write_extracted(extract_from_listing(batch_df), lake_path, quarantine_path)
 
-    writer = reader.writeStream.foreachBatch(sink)
+    writer = paths.writeStream.foreachBatch(sink)
     if checkpoint_path:
         writer = writer.option("checkpointLocation", checkpoint_path)
     if available_now:

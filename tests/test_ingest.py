@@ -1,4 +1,4 @@
-"""End-to-end ingest: fixtures -> binaryFile -> mapInPandas -> partitioned
+"""End-to-end ingest: fixtures -> object listing -> mapInPandas -> partitioned
 Parquet lake + quarantine (SURVEY §5 strategy item 2)."""
 
 import datetime
@@ -141,13 +141,41 @@ def test_dicom_lake_facade(spark, tmp_path_factory):
     assert quar is not None and quar.count() == 1
 
 
+def _reference_rows(root) -> list[dict]:
+    """The reference lifecycle written out by hand: walk the tree, skip
+    ignored extensions, read bare objects up to the ranged cap and
+    archives whole, then ``extract_records``."""
+    import os
+
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.archives import (
+        DCM_RANGED_READ_BYTES,
+        IGNORED_EXTS,
+        TAR_EXTS,
+        ZIP_EXTS,
+        eval_ext,
+    )
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.extract import extract_records
+
+    rows = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            ext = eval_ext(path)
+            if ext in IGNORED_EXTS:
+                continue
+            with open(path, "rb") as fh:
+                content = fh.read() if ext in ZIP_EXTS | TAR_EXTS else fh.read(DCM_RANGED_READ_BYTES)
+            rows.extend(extract_records(path, content))
+    return rows
+
+
 def test_dicom_python_datasource(spark, tmp_path_factory):
     """spark.read.format('dicom'): the extraction pipeline as a native
-    Spark-4 Python data source, equal to the mapInPandas ingest path."""
+    Spark-4 Python data source, equal to the object-by-object reference
+    lifecycle run in the test."""
     from pyspark.sql import functions as F
 
-    from dicom_metadata_extractor_serverless_datalake_spark.ingest.pipeline import extract_from_listing
-    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import list_binary_objects
+    from dicom_metadata_extractor_serverless_datalake_spark.schema import INGEST_SCHEMA
     from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
 
     from fixtures import write_fixture_tree
@@ -157,17 +185,124 @@ def test_dicom_python_datasource(spark, tmp_path_factory):
     register_dicom_source(spark)
 
     via_source = spark.read.format("dicom").load(str(root))
-    via_pipeline = extract_from_listing(list_binary_objects(spark, str(root)))
 
     key = lambda r: (r["source_s3_key"], r["source_s3_archive_path"] or "",  # noqa: E731
                      r["sop_instance_uid"] or "", (r["error"] or "")[:40])
     got = sorted(map(key, via_source.collect()))
-    want = sorted(map(key, via_pipeline.collect()))
+    want = sorted(map(key, _reference_rows(root)))
     assert got == want and len(got) > 0
     # schema carries the full canonical shape incl. the error channel
-    assert via_source.schema == via_pipeline.schema
+    assert via_source.schema == INGEST_SCHEMA
     # filters compose on the loaded frame
     assert via_source.filter(F.col("error").isNotNull()).count() >= 1
+
+
+@pytest.mark.parametrize(
+    "path, want",
+    [
+        ("/data/in/scan#1.dcm", (None, None, "/data/in/scan#1.dcm")),
+        ("/data/in/q?v=1.dcm", (None, None, "/data/in/q?v=1.dcm")),
+        ("file:/data/in/scan#1.dcm", (None, None, "/data/in/scan#1.dcm")),
+        ("file:///data/in/a b?.dcm", (None, None, "/data/in/a b?.dcm")),
+        ("s3://bkt/study/a#b.zip", ("bkt", None, "study/a#b.zip")),
+        ("s3a://bkt/study/x?y#z", ("bkt", None, "study/x?y#z")),
+        ("relative/notes#1.json", (None, None, "relative/notes#1.json")),
+    ],
+)
+def test_split_path_keeps_hash_and_query_in_key(path, want):
+    """'#' and '?' are ordinary key characters: only the scheme and
+    netloc are split off, never a fragment or a query."""
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.extract import local_path, split_path
+
+    assert split_path(path) == want
+    if want[0] is None:
+        assert local_path(path) == want[2]
+
+
+def test_hash_in_key_routes_by_real_extension():
+    """A zip whose key holds '#' explodes as a zip, and a sidecar whose
+    key holds '#' is ignored, instead of both being parsed as a bare
+    .dcm and quarantined."""
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest.extract import extract_records
+
+    from fixtures import make_dcm, make_zip
+
+    rows = list(extract_records("s3://bkt/study/a#b.zip", make_zip({"m1": make_dcm(1)})))
+    assert [(r["source_s3_key"], r["source_s3_archive_path"], r["error"]) for r in rows] == [
+        ("study/a#b.zip", "m1", None)
+    ]
+    assert list(extract_records("/data/in/notes#1.json", b"{}")) == []
+
+
+def test_read_extract_reads_s3_objects_by_range(monkeypatch):
+    """Object-store paths (what ``watch`` gets from an s3a:// stream) are
+    read where they sit: s3/s3a/s3n keys holding '#' and '?' open, a
+    read of n bytes returns the object's first n bytes, and the rows
+    equal those extracted from the same bytes locally."""
+    server = pytest.importorskip("moto.server")
+    boto3 = pytest.importorskip("boto3")
+
+    from dicom_metadata_extractor_serverless_datalake_spark.ingest import extract
+    from dicom_metadata_extractor_serverless_datalake_spark.streaming import start_ingest_stream
+
+    from fixtures import make_dcm, make_zip
+
+    srv = server.ThreadedMotoServer(ip_address="127.0.0.1", port=0, verbose=False)
+    srv.start()
+    try:
+        host, port = srv.get_host_and_port()
+        for k, v in {"AWS_ACCESS_KEY_ID": "test", "AWS_SECRET_ACCESS_KEY": "test",
+                     "AWS_DEFAULT_REGION": "us-east-1", "AWS_EC2_METADATA_DISABLED": "true",
+                     "AWS_ENDPOINT_URL": f"http://{host}:{port}"}.items():
+            monkeypatch.setenv(k, v)
+        extract._s3_filesystem.cache_clear()
+        objects = {"study/scan#1.dcm": make_dcm(1), "study/a?b.zip": make_zip({"m1": make_dcm(2)}),
+                   "study/notes.json": b"{}", "study/trunc.dcm": make_dcm(3)[:180]}
+        client = boto3.client("s3", endpoint_url=f"http://{host}:{port}")
+        client.create_bucket(Bucket="bkt")
+        for key, body in objects.items():
+            client.put_object(Bucket="bkt", Key=key, Body=body)
+
+        with extract.open_object("s3a://bkt/study/scan#1.dcm") as fh:
+            assert fh.read(64) == objects["study/scan#1.dcm"][:64]
+        uris = [f"{scheme}://bkt/{key}" for scheme, key in zip(("s3a", "s3", "s3n", "s3a"), objects)]
+        row = lambda r: (r["source_s3_bucket"], r["source_s3_key"],  # noqa: E731
+                         r["source_s3_archive_path"], r["sop_instance_uid"], r["error"] is None)
+        got = [row(r) for r in extract.read_extract(uris)]
+        want = [row(r) for uri, body in zip(uris, objects.values())
+                for r in extract.extract_records(uri, body)]
+        assert got == want
+        assert [k for _b, k, _m, _u, ok in got] == ["study/scan#1.dcm", "study/a?b.zip", "study/trunc.dcm"]
+        assert [ok for *_r, ok in got] == [True, True, False]
+    finally:
+        extract._s3_filesystem.cache_clear()
+        srv.stop()
+
+    with pytest.raises(ValueError, match="cannot read 'gs' objects"):
+        start_ingest_stream(None, "gs://bkt/incoming", "/unused/lake")
+
+
+def test_pack_covers_every_path_once_within_target():
+    """Next-fit: every path lands in exactly one pack, and no pack
+    exceeds the target unless it holds a single oversized object."""
+    import random
+
+    from dicom_metadata_extractor_serverless_datalake_spark.sources.binary import TARGET_PARTITION_BYTES, pack
+
+    rng = random.Random(7)
+    target = TARGET_PARTITION_BYTES
+    unit = target // 1000
+    entries = [(f"p{i}", rng.choice([0, 1, rng.randint(1, 400) * unit, rng.randint(900, 3000) * unit]))
+               for i in range(5000)]
+    sizes = dict(entries)
+    packs = pack(entries)
+    flat = [p for pk in packs for p in pk]
+    assert sorted(flat) == sorted(sizes)
+    for pk in packs:
+        assert pk
+        assert sum(sizes[p] for p in pk) <= target or len(pk) == 1
+    assert pack([]) == []
+    assert pack([("a", 0), ("b", 0), ("c", target), ("d", 1)]) == [["a", "b", "c"], ["d"]]
 
 
 def test_all_quarantined_ingest_yields_empty_lake(spark, tmp_path_factory):
@@ -189,6 +324,20 @@ def test_all_quarantined_ingest_yields_empty_lake(spark, tmp_path_factory):
     assert spark.table("allbad_meta").count() == 0
     assert spark.read.parquet(str(out / "quar")).count() == 2
 
+    # watch: a first micro-batch with only quarantined arrivals still
+    # creates the lake, so the facade reads it as empty
+    from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
+    from fixtures import make_dcm
+
+    arrivals = tmp_path_factory.mktemp("allbad_arrivals")
+    (arrivals / "trunc.dcm").write_bytes(make_dcm(2)[:180])
+    lake = DicomLake(spark, str(out / "watch_lake"), str(out / "watch_quar"), table="allbad_watch")
+    lake.watch(str(arrivals), str(out / "watch_ckpt"), available_now=True).awaitTermination(300)
+    lake.refresh()
+    assert lake.df().count() == 0
+    assert spark.table("allbad_watch").count() == 0
+    assert spark.read.parquet(str(out / "watch_quar")).count() == 1
+
 
 def test_lake_reconcile_replay_converges(spark, tmp_path):
     """reconcile() proves at-least-once replay convergence: a lake
@@ -197,7 +346,9 @@ def test_lake_reconcile_replay_converges(spark, tmp_path):
     object reports it as removed."""
     from dicom_metadata_extractor_serverless_datalake_spark import DicomLake
 
-    src = "/root/reference/sample_dcm"
+    # the sample_dcm equivalent, with the same tar/tar.gz duplicate UIDs
+    write_fixture_tree(tmp_path / "in")
+    src = str(tmp_path / "in")
     a = DicomLake(spark, str(tmp_path / "a"), quarantine_path=str(tmp_path / "qa"),
                   table="rec_a")
     a.ingest(src)
@@ -354,18 +505,42 @@ def test_breadcrumb_schema_stable_across_ingest_modes(spark, tmp_path_factory):
     """VERDICT r09 #6: the quarantine breadcrumb struct (stage,
     error_class, source_key, member_path, ts) is the SAME schema no
     matter which ingest mode wrote it — batch ``ingest_batch``,
-    streaming ``start_ingest_stream`` (a different foreachBatch sink),
-    and the native ``format("dicom")`` source (batch and stream) — so a
-    DLQ consumer can union quarantine output from every mode."""
+    streaming ``start_ingest_stream``, and the native ``format("dicom")``
+    source (batch and stream) — so a DLQ consumer can union quarantine
+    output from every mode. The four modes also write the same lake
+    rows, including for a key holding '#', a .dcm past the 10 MB ranged
+    cap, and a tar holding two members of the same name."""
     from dicom_metadata_extractor_serverless_datalake_spark.schema import QUARANTINE_LOG_SCHEMA
     from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
     from dicom_metadata_extractor_serverless_datalake_spark.streaming.ingest_stream import start_ingest_stream
+
+    import io
+    import tarfile
+
+    from dicom_metadata_extractor_serverless_datalake_spark.dicom.codec import write_dicom
 
     from fixtures import make_dcm
 
     root = tmp_path_factory.mktemp("bcmode_in")
     (root / "good.dcm").write_bytes(make_dcm(1))
     (root / "trunc.dcm").write_bytes(make_dcm(2)[:180])  # parse fails, non-empty
+    (root / "scan#1.dcm").write_bytes(make_dcm(3))
+    big_uid = "1.2.826.0.1.3680043.8.498.11"
+    (root / "big.dcm").write_bytes(  # past the ranged-read cap
+        write_dicom(
+            {"SOPInstanceUID": big_uid, "Modality": "OT", "StudyDate": "20210101"},
+            pixel_data=bytes(11 << 20),
+            sop_instance_uid=big_uid,
+        )
+    )
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for seed in (4, 5):  # two members, one name
+            data = make_dcm(seed)
+            info = tarfile.TarInfo("dup.dcm")
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+    (root / "twins.tar").write_bytes(buf.getvalue())
     out = tmp_path_factory.mktemp("bcmode_out")
 
     # mode 1: batch pipeline
@@ -416,6 +591,28 @@ def test_breadcrumb_schema_stable_across_ingest_modes(spark, tmp_path_factory):
         assert bc["error_class"], f"{mode}: missing error_class"
         assert bc["source_key"].endswith("trunc.dcm"), f"{mode}: bad source_key"
         assert bc["ts"] is not None, f"{mode}: missing ts"
+
+    # the four modes write the same lake rows
+    lakes = {
+        "batch": spark.read.parquet(str(out / "lake_b")),
+        "stream": spark.read.parquet(str(out / "lake_s")),
+        "native_batch": spark.read.format("dicom").load(str(root)).filter("error IS NULL"),
+        "native_stream": spark.read.parquet(str(out / "lake_ns")).filter("error IS NULL"),
+    }
+    lake_rows = {
+        mode: sorted(
+            tuple(r)
+            for r in df.select("source_s3_key", "source_s3_archive_path", "sop_instance_uid").collect()
+        )
+        for mode, df in lakes.items()
+    }
+    want_rows = lake_rows["batch"]
+    assert len(want_rows) == 5, want_rows
+    assert any(k.endswith("/scan#1.dcm") for k, _m, _u in want_rows)
+    assert any(u == big_uid for _k, _m, u in want_rows)
+    assert sum(m == "dup.dcm" for _k, m, _u in want_rows) == 2
+    for mode, got_rows in lake_rows.items():
+        assert got_rows == want_rows, f"{mode}: lake rows differ from batch"
 
     # the four modes' breadcrumbs union cleanly — the consumer contract
     u = (

@@ -343,7 +343,7 @@ def test_dicom_stream_source_keeps_empty_files(spark, tmp_path_factory):
 
     from dicom_metadata_extractor_serverless_datalake_spark.sources.dicom_source import register_dicom_source
 
-    from fixtures import write_fixture_tree
+    from fixtures import make_dcm, write_fixture_tree
 
     root = tmp_path_factory.mktemp("dsstream_in")
     write_fixture_tree(root)
@@ -370,9 +370,7 @@ def test_dicom_stream_source_keeps_empty_files(spark, tmp_path_factory):
 
     # late arrival: a new file lands -> only it is delivered next batch
     _time.sleep(0.05)
-    import shutil as _sh
-
-    _sh.copy("/root/reference/sample_dcm/example-0", str(root / "late.dcm"))
+    (root / "late.dcm").write_bytes(make_dcm(42))
     run_batch()
     df2 = spark.read.parquet(str(out / "lake"))
     assert df2.count() == 12
